@@ -11,14 +11,17 @@ the materialize step still re-aggregated EVERY checkpointed run's
 triples — O(total corpus) per batch, which at 100 TB steady state is the
 wrong loop.
 
-This module keeps the materialize aggregation's PARTIAL STATE as
-persistent tables and folds each new batch in with the aggregations'
-own merge functions — materialized-view maintenance, Spark-first:
+This module owns bucketed STORAGE of the materialize aggregation's
+partial state — materialized-view maintenance, Spark-first. The
+aggregates themselves live in materialize.py (`partial_states`,
+`merge_states`, `derive_tables`, shared with the full build); a batch
+merge is partial(batch) → merge with the touched state buckets →
+rewrite those buckets, and `tables()` is derive(state):
 
-- every materialize aggregate is algebraic (max_by over a content-
-  derived canonical order, min/max, sorted value lists, label sets,
+- every aggregate is algebraic (a struct-max led by a content-derived
+  canonical order key, min/max, sorted value lists, label sets,
   edge-row distinct), so `merge(state, partial(batch)) ==
-  aggregate(union)` EXACTLY — incremental output is bit-identical to a
+  partial(union)` EXACTLY — incremental output is bit-identical to a
   from-scratch import of the union, a property the reference's
   arrival-order store does not have (re-import order changes its
   OVERWRITE results; canonical order makes ours deterministic).
@@ -67,13 +70,9 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import ARRAY, LABELS, LABELS_AND_NODES, NODES, GraphConfig
-from ..rdf.terms import OWL_SAMEAS, RDF_TYPE
-from .materialize import GraphTables, _ord
-from .transforms import split_star_rows
-
-_TABLES = ("prop_state", "label_state", "edge_state", "rel_raw_state",
-           "star_state", "uri_state")
+from ..config import GraphConfig
+from ..rdf.terms import OWL_SAMEAS
+from .materialize import GraphTables, _ord, derive_tables, merge_states, partial_states
 
 # the entity column each state table is hash-bucketed on: the leading
 # column of its group key, so co-bucketing holds for every aggregation
@@ -88,21 +87,19 @@ _BUCKET_KEY = {
 }
 
 
-def _cfg_fingerprint(
-    cfg: GraphConfig, with_graph_identity: bool, order: str, n_buckets: int
-) -> str:
+def _cfg_fingerprint(cfg: GraphConfig, order: str, n_buckets: int) -> str:
     import hashlib
     from dataclasses import asdict
 
     payload = {
         "cfg": asdict(cfg),
-        "with_graph_identity": with_graph_identity,
         "order": order,
         "n_buckets": n_buckets,
-        # bumped when the persisted state-table schemas change (r6:
-        # bucketed layout + uri_state.has_real) — old roots refuse loudly
-        # instead of failing on a missing column mid-merge
-        "state_schema": 2,
+        # bumped when the persisted state-table schemas change (2: bucketed
+        # layout + uri_state.has_real; 3: prop_state/star_state `last` is
+        # one struct led by the order key, no separate last_ord/last_o) —
+        # old roots refuse loudly instead of failing mid-merge
+        "state_schema": 3,
     }
     return hashlib.sha256(
         json.dumps(payload, sort_keys=True, default=str).encode()
@@ -121,7 +118,6 @@ class IncrementalGraphStore:
         spark: SparkSession,
         root: str,
         cfg: Optional[GraphConfig] = None,
-        with_graph_identity: bool = True,
         order: str = "canonical",
         n_buckets: int = 16,
         max_live_versions: int = 8,
@@ -144,16 +140,12 @@ class IncrementalGraphStore:
         self.spark = spark
         self.root = root
         self.cfg = cfg or GraphConfig()
-        self.with_graph_identity = with_graph_identity
         self.order = order
         self.n_buckets = n_buckets
         self.max_live_versions = max(1, max_live_versions)
-        self.need_arrays = (
-            self.cfg.handle_multival == ARRAY or self.cfg.strict_data_type_check
-        )
         self.p_commits = os.path.join(root, "commits")
         self.p_meta = os.path.join(root, "meta.json")
-        fp = _cfg_fingerprint(self.cfg, with_graph_identity, order, n_buckets)
+        fp = _cfg_fingerprint(self.cfg, order, n_buckets)
         if os.path.exists(self.p_meta):
             with open(self.p_meta) as fh:
                 meta = json.load(fh)
@@ -283,7 +275,7 @@ class IncrementalGraphStore:
             if name_.startswith("v=") and name_ not in keep_names:
                 shutil.rmtree(os.path.join(self.root, name_), ignore_errors=True)
 
-    # ------------------------------------------------------------ partials
+    # ------------------------------------------------------------ order
     def _ord_col(self, version: int):
         """Canonical (content-derived) or arrival (batch-seq-prefixed)
         statement order. Canonical makes merge-of-batches == aggregate-
@@ -293,161 +285,6 @@ class IncrementalGraphStore:
         if self.order == "arrival":
             o = F.concat(F.lpad(F.lit(version), 8, "0"), F.lit("|"), o)
         return o
-
-    def _partials(self, triples_t: DataFrame, version: int) -> dict:
-        cfg = self.cfg
-        g = (
-            F.coalesce(F.col("graph"), F.lit(""))
-            if self.with_graph_identity
-            else F.lit("")
-        )
-        t = triples_t.withColumn("gkey", g)
-        regular, star = split_star_rows(t)
-        is_type = (F.col("predicate") == RDF_TYPE) & ~F.col("is_literal")
-        ordc = self._ord_col(version)
-
-        lit_rows = regular.filter(F.col("is_literal"))
-        aggs = [
-            F.max(ordc).alias("last_ord"),
-            F.max_by(
-                F.struct(
-                    F.col("value").alias("v"),
-                    F.col("value_type").alias("t"),
-                    F.col("datatype").alias("dt"),
-                    F.col("lang").alias("lg"),
-                ),
-                ordc,
-            ).alias("last"),
-            F.min("value_type").alias("vt_min"),
-            F.max("value_type").alias("vt_max"),
-            F.min("graph").alias("g_min"),
-            F.min("predicate").alias("pred_raw_min"),
-        ]
-        if self.need_arrays:
-            aggs.append(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            ordc.alias("o"),
-                            F.col("value").alias("v"),
-                            F.col("value_type").alias("t"),
-                        )
-                    )
-                ).alias("sorted")
-            )
-        prop = lit_rows.groupBy("subject", "gkey", "pred_t").agg(*aggs)
-
-        type_rows = regular.filter(is_type)
-        label = type_rows.groupBy("subject", "gkey").agg(
-            F.array_sort(F.collect_set("label_t")).alias("labels")
-        )
-
-        obj_rows = regular.filter(~F.col("is_literal") & ~is_type)
-        node_mode = cfg.handle_rdf_types in (NODES, LABELS_AND_NODES)
-        if node_mode:
-            obj_rows = obj_rows.unionByName(type_rows.select(*obj_rows.columns))
-        edge = obj_rows.select(
-            F.col("subject").alias("src"),
-            F.col("rel_t").alias("rel"),
-            F.col("object").alias("dst"),
-            "graph",
-            "gkey",
-        ).dropDuplicates(["src", "rel", "dst", "gkey"])
-        rel_raw = obj_rows.select(
-            F.col("subject").alias("src"),
-            F.col("predicate").alias("_raw_rel"),
-            F.col("rel_t").alias("rel"),
-            F.col("object").alias("dst"),
-        ).dropDuplicates(["src", "_raw_rel", "dst"])
-        star_p = (
-            star.select(
-                F.col("sspo")[0].alias("src"),
-                F.col("sspo")[1].alias("_raw_rel"),
-                F.col("sspo")[2].alias("dst"),
-                F.col("pred_t").alias("prop"),
-                F.col("value"),
-                ordc.alias("_o"),
-            )
-            .groupBy("src", "_raw_rel", "dst", "prop")
-            .agg(F.max("_o").alias("last_o"), F.max_by("value", "_o").alias("value"))
-        )
-        # has_real marks provenance from a non-owl:sameAs statement: the
-        # canonical refresh (`tables_canonicalized`) must drop uris whose
-        # ONLY provenance is sameAs rows, because the full-recompute
-        # pipeline canonicalizes and then DROPS those statements
-        # (cc.canonicalize_triples drop_sameas) before materializing
-        real = F.col("predicate") != OWL_SAMEAS
-        uri = (
-            regular.select(
-                F.col("subject").alias("uri"), "gkey", "graph", real.alias("has_real")
-            )
-            .unionByName(
-                obj_rows.select(
-                    F.col("object").alias("uri"), "gkey", "graph", real.alias("has_real")
-                )
-            )
-            .groupBy("uri", "gkey")
-            .agg(F.min("graph").alias("g_min"), F.max("has_real").alias("has_real"))
-        )
-        return {
-            "prop_state": prop,
-            "label_state": label,
-            "edge_state": edge,
-            "rel_raw_state": rel_raw,
-            "star_state": star_p,
-            "uri_state": uri,
-        }
-
-    @staticmethod
-    def _merge(table: str, old: DataFrame, new: DataFrame, need_arrays: bool) -> DataFrame:
-        return IncrementalGraphStore._reaggregate(
-            table, old.unionByName(new), need_arrays
-        )
-
-    @staticmethod
-    def _reaggregate(table: str, u: DataFrame, need_arrays: bool) -> DataFrame:
-        """Re-run one state table's aggregation over an arbitrary row set
-        — the merge function applied to a union (merge_batch) or to a
-        remapped state (tables_canonicalized). Every aggregate is
-        algebraic with a single-row fixpoint, so this is also an
-        identity on untouched groups."""
-        if table == "prop_state":
-            aggs = [
-                F.max("last_ord").alias("last_ord"),
-                F.max_by("last", "last_ord").alias("last"),
-                F.min("vt_min").alias("vt_min"),
-                F.max("vt_max").alias("vt_max"),
-                F.min("g_min").alias("g_min"),
-                F.min("pred_raw_min").alias("pred_raw_min"),
-            ]
-            if need_arrays:
-                # merge of per-batch sorted runs == sort of the union:
-                # the order key is globally unique, so flatten+sort is
-                # exactly the from-scratch collect_list+sort
-                aggs.append(
-                    F.array_sort(F.flatten(F.collect_list("sorted"))).alias("sorted")
-                )
-            return u.groupBy("subject", "gkey", "pred_t").agg(*aggs)
-        if table == "label_state":
-            return u.groupBy("subject", "gkey").agg(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("labels")))
-                ).alias("labels")
-            )
-        if table == "edge_state":
-            return u.dropDuplicates(["src", "rel", "dst", "gkey"])
-        if table == "rel_raw_state":
-            return u.dropDuplicates(["src", "_raw_rel", "dst"])
-        if table == "star_state":
-            return u.groupBy("src", "_raw_rel", "dst", "prop").agg(
-                F.max("last_o").alias("last_o"),
-                F.max_by("value", "last_o").alias("value"),
-            )
-        if table == "uri_state":
-            return u.groupBy("uri", "gkey").agg(
-                F.min("g_min").alias("g_min"), F.max("has_real").alias("has_real")
-            )
-        raise ValueError(table)
 
     # ----------------------------------------------------------------- API
     def merge_batch(self, triples_t: DataFrame, batch_id: Optional[str] = None) -> dict:
@@ -470,7 +307,7 @@ class IncrementalGraphStore:
         manifest = self._read_manifest()
         cur = manifest["version"]
         new_v = cur + 1
-        partials = self._partials(triples_t, new_v)
+        partials = partial_states(triples_t, self.cfg, self._ord_col(new_v))
         bucket_map = {
             t: dict(m) for t, m in manifest.get("buckets", {}).items()
         }
@@ -500,10 +337,9 @@ class IncrementalGraphStore:
                 counts[table] = sum(cmap.values())
                 continue
             old = self._read_buckets(table, tmap, touched)
+            part = part.drop("bucket")
             merged = (
-                part.drop("bucket")
-                if old is None
-                else self._merge(table, old, part.drop("bucket"), self.need_arrays)
+                part if old is None else merge_states(table, old.unionByName(part), self.cfg)
             )
             out = self._vdir(new_v, table)
             (
@@ -551,14 +387,7 @@ class IncrementalGraphStore:
         the `materialize` output over the union of merged batches."""
         if self.version() == 0:
             raise ValueError("IncrementalGraphStore is empty — merge a batch first")
-        return self._derive_tables(
-            self._state("prop_state"),
-            self._state("label_state"),
-            self._state("edge_state"),
-            self._state("rel_raw_state"),
-            self._state("star_state"),
-            self._state("uri_state"),
-        )
+        return derive_tables({t: self._state(t) for t in _BUCKET_KEY}, self.cfg)
 
     def canonical_remap(self) -> DataFrame:
         """(uri, component) over the owl:sameAs cliques recorded in the
@@ -629,130 +458,31 @@ class IncrementalGraphStore:
                 )
             return df
 
-        na = self.need_arrays
+        cfg = self.cfg
         rel_raw0 = self._state("rel_raw_state")
         sameas_keys = rel_raw0.filter(F.col("_raw_rel") == OWL_SAMEAS).select(
             "src", "rel", "dst"
         )
-        prop = self._reaggregate(
-            "prop_state", remap(self._state("prop_state"), ["subject"]), na
-        )
-        label = self._reaggregate(
-            "label_state", remap(self._state("label_state"), ["subject"]), na
-        )
-        edge = self._reaggregate(
-            "edge_state",
-            remap(
-                self._state("edge_state").join(
-                    sameas_keys, ["src", "rel", "dst"], "left_anti"
-                ),
-                ["src", "dst"],
+        edge0 = self._state("edge_state").join(sameas_keys, ["src", "rel", "dst"], "left_anti")
+        states = {
+            "prop_state": merge_states(
+                "prop_state", remap(self._state("prop_state"), ["subject"]), cfg
             ),
-            na,
-        )
-        rel_raw = self._reaggregate(
-            "rel_raw_state",
-            remap(rel_raw0.filter(F.col("_raw_rel") != OWL_SAMEAS), ["src", "dst"]),
-            na,
-        )
-        uri = self._reaggregate(
-            "uri_state", remap(self._state("uri_state"), ["uri"]), na
-        ).filter(F.col("has_real"))
-        return self._derive_tables(
-            prop, label, edge, rel_raw, self._state("star_state"), uri
-        )
-
-    def _derive_tables(
-        self,
-        prop: DataFrame,
-        label: DataFrame,
-        edge: DataFrame,
-        rel_raw: DataFrame,
-        star: DataFrame,
-        uri: DataFrame,
-    ) -> GraphTables:
-        cfg = self.cfg
-        mixed = F.col("vt_min") != F.col("vt_max")
-        per_prop = prop.withColumn("n_types", F.when(mixed, 2).otherwise(1))
-        if self.need_arrays:
-            kept = F.col("sorted")
-            if cfg.strict_data_type_check:
-                first_t = F.element_at(F.col("sorted"), 1)["t"]
-                kept = F.filter(kept, lambda x: x["t"] == first_t)
-            all_values = F.array_distinct(F.transform(kept, lambda x: x["v"]))
-        else:
-            all_values = F.array(F.col("last")["v"])
-        if cfg.handle_multival == ARRAY:
-            if cfg.multival_prop_list:
-                values = F.when(
-                    F.col("pred_raw_min").isin(cfg.multival_prop_list), all_values
-                ).otherwise(F.array(F.col("last")["v"]))
-            else:
-                values = all_values
-        else:
-            values = F.array(F.col("last")["v"])
-        node_props = per_prop.select(
-            F.col("subject").alias("uri"),
-            F.col("gkey"),
-            F.col("g_min").alias("graph"),
-            F.col("pred_t").alias("prop"),
-            F.col("pred_raw_min").alias("prop_raw"),
-            values.alias("values"),
-            F.col("last")["t"].alias("value_type"),
-            F.col("last")["dt"].alias("datatype"),
-            F.col("last")["lg"].alias("lang"),
-            F.col("n_types"),
-        )
-
-        label_mode = cfg.handle_rdf_types in (LABELS, LABELS_AND_NODES)
-        props_map = node_props.groupBy("uri", "gkey").agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("prop").alias("key"),
-                            F.when(F.size("values") == 1, F.col("values")[0])
-                            .otherwise(F.to_json("values"))
-                            .alias("value"),
-                        )
-                    )
-                )
-            ).alias("props")
-        )
-        all_uris = uri.select("uri", "gkey", F.col("g_min").alias("graph"))
-        nodes = all_uris.join(props_map, ["uri", "gkey"], "left")
-        if label_mode:
-            nodes = nodes.join(
-                label.select(F.col("subject").alias("uri"), "gkey", "labels"),
-                ["uri", "gkey"],
-                "left",
-            )
-        else:
-            nodes = nodes.withColumn("labels", F.lit(None).cast("array<string>"))
-        nodes = nodes.select(
-            "uri",
-            "graph",
-            F.coalesce("labels", F.array()).alias("labels"),
-            F.coalesce("props", F.expr("cast(map() as map<string,string>)")).alias("props"),
-        )
-
-        star_props = star.groupBy("src", "_raw_rel", "dst").agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("prop", "value")))
-            ).alias("props")
-        )
-        star_mapped = star_props.join(
-            rel_raw, ["src", "_raw_rel", "dst"], "inner"
-        ).select("src", "rel", "dst", "props")
-        edges = (
-            edge.join(star_mapped, ["src", "rel", "dst"], "left")
-            .select("src", "rel", "dst", "graph", "props")
-        )
-        node_props_out = node_props.select(
-            "uri", "graph", "prop", "prop_raw", "values", "value_type",
-            "datatype", "lang", "n_types",
-        )
-        return GraphTables(nodes=nodes, edges=edges, node_props=node_props_out)
+            "label_state": merge_states(
+                "label_state", remap(self._state("label_state"), ["subject"]), cfg
+            ),
+            "edge_state": merge_states("edge_state", remap(edge0, ["src", "dst"]), cfg),
+            "rel_raw_state": merge_states(
+                "rel_raw_state",
+                remap(rel_raw0.filter(F.col("_raw_rel") != OWL_SAMEAS), ["src", "dst"]),
+                cfg,
+            ),
+            "star_state": self._state("star_state"),
+            "uri_state": merge_states(
+                "uri_state", remap(self._state("uri_state"), ["uri"]), cfg
+            ).filter(F.col("has_real")),
+        }
+        return derive_tables(states, cfg)
 
 
 def extend_prefix_map(existing: dict, namespaces: list) -> dict:

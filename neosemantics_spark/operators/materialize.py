@@ -3,11 +3,18 @@
 Batch re-expression of the reference's accumulate-then-flush loader
 (/root/reference/src/main/java/n10s/rdf/load/DirectStatementLoader.java):
 the per-batch upsert machinery (LRU node cache, find-or-create, commitSize
-partial transactions) collapses into three shuffles:
+partial transactions) collapses into grouped aggregations. This module is
+the one definition of those aggregates (A1–A5), in three steps:
 
-  1. groupBy(subject, predicate)  — property semantics (A1/A3)
-  2. groupBy(subject)             — label sets + props assembly (A2)
-  3. dropDuplicates(edge key)     — edge dedup (A4/A5)
+  partial_states  triples → six partial-aggregate tables (per-prop
+                  last value / value list, label sets, distinct edges,
+                  raw-rel map, RDF-star edge props, node set)
+  merge_states    re-aggregate a union of partials (algebraic merge)
+  derive_tables   partials → nodes / edges / node_props
+
+`materialize` is derive(partial(all triples)); the incremental store
+(incremental.py) persists the partials and folds each batch in with
+`merge_states`, so both builds give the same tables by construction.
 
 Determinism: OVERWRITE last-wins / ARRAY order use the canonical total
 order (repo, path, commit, stmt_idx) — the reference relies on statement
@@ -26,11 +33,11 @@ from __future__ import annotations
 
 from typing import Dict, NamedTuple, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ARRAY, LABELS, LABELS_AND_NODES, NODES, GraphConfig
-from ..rdf.terms import RDF_TYPE
+from ..rdf.terms import OWL_SAMEAS, RDF_TYPE
 from .prefixes import shorten_expr
 from .transforms import (
     filter_language,
@@ -116,42 +123,49 @@ def transform_triples(
     return t
 
 
-def materialize(
-    triples_t: DataFrame,
-    cfg: GraphConfig,
-    with_graph_identity: bool = True,
-    cache_intermediate: bool = False,
-) -> GraphTables:
-    """Transformed triples → GraphTables. `triples_t` is the output of
-    `transform_triples`. Node identity is (uri, graph) when quads are
-    present (RDFQuadToLPGStatementProcessor.java:54-57,99-113)."""
-    g = F.coalesce(F.col("graph"), F.lit("")) if with_graph_identity else F.lit("")
-    t = triples_t.withColumn("gkey", g)
+def _need_arrays(cfg: GraphConfig) -> bool:
+    """ARRAY / strict semantics need the full ordered value list; the
+    collect_list buffer is the expensive part of the per-prop state, so
+    OVERWRITE builds never carry it."""
+    return cfg.handle_multival == ARRAY or cfg.strict_data_type_check
+
+
+def partial_states(triples_t: DataFrame, cfg: GraphConfig, ord_col: Column) -> dict:
+    """Transformed triples → the six partial-aggregate tables, keyed
+    prop_state, label_state, edge_state, rel_raw_state, star_state and
+    uri_state. Every aggregate is algebraic with a single-row
+    fixpoint, so `merge_states` over a union of partials equals the
+    partial of the union — a full build and an incremental build share
+    this one definition. `ord_col` is the statement order key (`_ord()`,
+    or an arrival-prefixed variant); it must be unique per statement.
+    Node identity is (uri, graph) when quads are present
+    (RDFQuadToLPGStatementProcessor.java:54-57,99-113)."""
+    t = triples_t.withColumn("gkey", F.coalesce(F.col("graph"), F.lit("")))
     regular, star = split_star_rows(t)
     is_type = (F.col("predicate") == RDF_TYPE) & ~F.col("is_literal")
 
     # ---------------- properties: groupBy (subject, gkey, predicate) [A1/A3]
-    # the canonical order key is projected ONCE per row (`_o`): the agg
-    # below used to evaluate the concat_ws+lpad expression inside four
-    # separate max_by buffers (4-5 evaluations per input row, and four
-    # per-group (ord, value) buffer pairs). One struct-max keyed on the
-    # unique `_o` returns the same last-written row — `_o` is unique per
-    # statement, so the struct comparison never consults the payload
-    # fields — with a quarter of the per-task aggregation state.
-    lit_rows = regular.filter(F.col("is_literal")).withColumn("_o", _ord())
-    need_arrays = cfg.handle_multival == ARRAY or cfg.strict_data_type_check
+    # the order key is projected ONCE per row (`_o`) and the last-written
+    # row is one struct-max buffer: `o` is unique per statement, so the
+    # comparison never consults the payload fields. Type conflicts are
+    # min != max of value_type (count_distinct would plan an Expand).
+    lit_rows = regular.filter(F.col("is_literal")).withColumn("_o", ord_col)
     aggs = [
-        F.max(F.struct("_o", "value", "value_type", "datatype", "lang")).alias("_last"),
-        # type-conflict flag without count_distinct — count_distinct plans
-        # an Expand (doubles the shuffled rows); min!=max is one hash agg
-        (F.min("value_type") != F.max("value_type")).alias("_mixed"),
-        F.min("graph").alias("graph"),
-        F.min("predicate").alias("_pred_raw"),
+        F.max(
+            F.struct(
+                F.col("_o").alias("o"),
+                F.col("value").alias("v"),
+                F.col("value_type").alias("t"),
+                F.col("datatype").alias("dt"),
+                F.col("lang").alias("lg"),
+            )
+        ).alias("last"),
+        F.min("value_type").alias("vt_min"),
+        F.max("value_type").alias("vt_max"),
+        F.min("graph").alias("g_min"),
+        F.min("predicate").alias("pred_raw_min"),
     ]
-    if need_arrays:
-        # the collect_list buffer is the expensive part (per-task
-        # aggregation state) — only build it when ARRAY/strict semantics
-        # actually need the full value list
+    if _need_arrays(cfg):
         aggs.append(
             F.array_sort(
                 F.collect_list(
@@ -159,117 +173,145 @@ def materialize(
                         F.col("_o").alias("o"), F.col("value").alias("v"), F.col("value_type").alias("t")
                     )
                 )
-            ).alias("_sorted")
+            ).alias("sorted")
         )
-    per_prop = lit_rows.groupBy("subject", "gkey", "pred_t").agg(*aggs)
-    per_prop = per_prop.withColumns(
-        {
-            "last_value": F.col("_last.value"),
-            "value_type": F.col("_last.value_type"),
-            "datatype": F.col("_last.datatype"),
-            "lang": F.col("_last.lang"),
-        }
-    ).drop("_last")
-    per_prop = per_prop.withColumn("n_types", F.when(F.col("_mixed"), 2).otherwise(1))
-    if need_arrays:
-        # A3 heterogeneous-type resolution (DirectStatementLoader.java:161-211):
-        # strict ⇒ discard values whose type conflicts with the first-stored
-        # value's type; non-strict ⇒ array keeps everything as strings (our
-        # canonical `value` is already the lexical string form).
-        kept = F.col("_sorted")
-        if cfg.strict_data_type_check:
-            first_t = F.element_at(F.col("_sorted"), 1)["t"]
-            kept = F.filter(kept, lambda x: x["t"] == first_t)
-        all_values = F.array_distinct(F.transform(kept, lambda x: x["v"]))
-    else:
-        all_values = F.array(F.col("last_value"))
-    if cfg.handle_multival == ARRAY:
-        if cfg.multival_prop_list:
-            # multivalPropList holds full predicate IRIs
-            # (RDFToLPGStatementProcessor.java:350-368)
-            values = F.when(
-                F.col("_pred_raw").isin(cfg.multival_prop_list), all_values
-            ).otherwise(F.array(F.col("last_value")))
-        else:
-            values = all_values
-    else:  # OVERWRITE: last value wins (RDFToLPGStatementProcessor.java:346-349)
-        values = F.array(F.col("last_value"))
-    node_props = per_prop.select(
-        F.col("subject").alias("uri"),
-        F.col("gkey"),
-        F.col("graph"),
-        F.col("pred_t").alias("prop"),
-        F.col("_pred_raw").alias("prop_raw"),
-        values.alias("values"),
-        F.col("value_type"),
-        F.col("datatype"),
-        F.col("lang"),
-        F.col("n_types"),
-    )
-    if cache_intermediate:
-        # the expensive per-prop aggregation feeds BOTH the node_props
-        # output and the nodes props-map — persist it once so the two
-        # consumers (and any SHACL/export fan-out) don't recompute it
-        node_props = node_props.persist()
+    prop = lit_rows.groupBy("subject", "gkey", "pred_t").agg(*aggs)
 
-    # ---------------- labels [A2/T9]
+    # ---------------- labels [A2/T9]; lazy: only LABELS modes read it
     type_rows = regular.filter(is_type)
-    label_mode = cfg.handle_rdf_types in (LABELS, LABELS_AND_NODES)
-    node_mode = cfg.handle_rdf_types in (NODES, LABELS_AND_NODES)
-    labels = (
-        type_rows.groupBy("subject", "gkey")
-        .agg(F.array_sort(F.collect_set("label_t")).alias("labels"))
-        if label_mode
-        else None
+    label = type_rows.groupBy("subject", "gkey").agg(
+        F.array_sort(F.collect_set("label_t")).alias("labels")
     )
 
     # ---------------- edges [A4/A5/J2/T10]
     obj_rows = regular.filter(~F.col("is_literal") & ~is_type)
-    if node_mode:
+    if cfg.handle_rdf_types in (NODES, LABELS_AND_NODES):
         obj_rows = obj_rows.unionByName(type_rows.select(*obj_rows.columns))
-    edges_base = obj_rows.select(
+    edge = obj_rows.select(
         F.col("subject").alias("src"),
         F.col("rel_t").alias("rel"),
         F.col("object").alias("dst"),
-        F.col("graph"),
-        F.col("gkey"),
+        "graph",
+        "gkey",
     ).dropDuplicates(["src", "rel", "dst", "gkey"])
-    # RDF-star rel props: sspo identifies the edge (raw IRIs) → join after
-    # transforming predicate (T10, RDFToLPGStatementProcessor.java:406-424)
-    star_props = (
-        star.select(
-            F.col("sspo")[0].alias("src"),
-            F.col("sspo")[1].alias("_raw_rel"),
-            F.col("sspo")[2].alias("dst"),
-            F.col("pred_t").alias("prop"),
-            F.col("value"),
-            _ord().alias("_o"),
-        )
-        .groupBy("src", "_raw_rel", "dst", "prop")
-        .agg(F.max_by("value", "_o").alias("value"))
-        .groupBy("src", "_raw_rel", "dst")
-        .agg(F.map_from_entries(F.collect_list(F.struct("prop", "value"))).alias("props"))
-    )
+    # RDF-star rel props: sspo identifies the edge by raw IRIs; rel_raw
+    # maps it to the transformed rel (T10, RDFToLPGStatementProcessor.java:406-424)
     rel_raw = obj_rows.select(
         F.col("subject").alias("src"),
         F.col("predicate").alias("_raw_rel"),
         F.col("rel_t").alias("rel"),
         F.col("object").alias("dst"),
     ).dropDuplicates(["src", "_raw_rel", "dst"])
-    # star_props is usually tiny relative to edges; AQE picks the build side
-    star_mapped = star_props.join(rel_raw, ["src", "_raw_rel", "dst"], "inner").select(
-        "src", "rel", "dst", "props"
-    )
-    edges = edges_base.join(star_mapped, ["src", "rel", "dst"], "left").select(
-        "src", "rel", "dst", "graph", "props", "gkey"
+    star_p = (
+        star.select(
+            F.col("sspo")[0].alias("src"),
+            F.col("sspo")[1].alias("_raw_rel"),
+            F.col("sspo")[2].alias("dst"),
+            F.col("pred_t").alias("prop"),
+            F.struct(ord_col.alias("o"), F.col("value").alias("v")).alias("_ov"),
+        )
+        .groupBy("src", "_raw_rel", "dst", "prop")
+        .agg(F.max("_ov").alias("last"))
     )
 
-    # ---------------- nodes: subjects ∪ non-literal objects [J1/J2]
-    subj_uris = regular.select(F.col("subject").alias("uri"), "gkey", "graph")
-    obj_uris = obj_rows.select(F.col("object").alias("uri"), "gkey", "graph")
-    all_uris = subj_uris.unionByName(obj_uris).groupBy("uri", "gkey").agg(
-        F.min("graph").alias("graph")
+    # ---------------- nodes: subjects ∪ non-literal objects [J1/J2].
+    # has_real marks provenance from a non-owl:sameAs statement: the
+    # canonical refresh (`IncrementalGraphStore.tables_canonicalized`)
+    # drops uris whose ONLY provenance is sameAs rows, because the
+    # full-recompute pipeline drops those statements
+    # (cc.canonicalize_triples drop_sameas) before materializing
+    real = (F.col("predicate") != OWL_SAMEAS).alias("has_real")
+    uri = (
+        regular.select(F.col("subject").alias("uri"), "gkey", "graph", real)
+        .unionByName(obj_rows.select(F.col("object").alias("uri"), "gkey", "graph", real))
+        .groupBy("uri", "gkey")
+        .agg(F.min("graph").alias("g_min"), F.max("has_real").alias("has_real"))
     )
+    return {
+        "prop_state": prop,
+        "label_state": label,
+        "edge_state": edge,
+        "rel_raw_state": rel_raw,
+        "star_state": star_p,
+        "uri_state": uri,
+    }
+
+
+def merge_states(table: str, rows: DataFrame, cfg: GraphConfig) -> DataFrame:
+    """Re-run one state table's aggregation over any set of its rows —
+    the merge of a union of partials, or of a remapped state. Every
+    aggregate is algebraic with a single-row fixpoint, so this is also
+    an identity on groups whose rows did not change."""
+    if table == "prop_state":
+        aggs = [
+            F.max("last").alias("last"),
+            F.min("vt_min").alias("vt_min"),
+            F.max("vt_max").alias("vt_max"),
+            F.min("g_min").alias("g_min"),
+            F.min("pred_raw_min").alias("pred_raw_min"),
+        ]
+        if _need_arrays(cfg):
+            # merge of sorted runs == sort of the union: the order key is
+            # unique per statement, so flatten+sort is exactly the
+            # from-scratch collect_list+sort
+            aggs.append(F.array_sort(F.flatten(F.collect_list("sorted"))).alias("sorted"))
+        return rows.groupBy("subject", "gkey", "pred_t").agg(*aggs)
+    if table == "label_state":
+        return rows.groupBy("subject", "gkey").agg(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("labels")))).alias("labels")
+        )
+    if table == "edge_state":
+        return rows.dropDuplicates(["src", "rel", "dst", "gkey"])
+    if table == "rel_raw_state":
+        return rows.dropDuplicates(["src", "_raw_rel", "dst"])
+    if table == "star_state":
+        return rows.groupBy("src", "_raw_rel", "dst", "prop").agg(F.max("last").alias("last"))
+    if table == "uri_state":
+        return rows.groupBy("uri", "gkey").agg(
+            F.min("g_min").alias("g_min"), F.max("has_real").alias("has_real")
+        )
+    raise ValueError(f"unknown state table {table!r}")
+
+
+def derive_tables(states: dict, cfg: GraphConfig) -> GraphTables:
+    """The six state tables → GraphTables (nodes, edges, node_props)."""
+    last_v = F.array(F.col("last.v"))
+    if _need_arrays(cfg):
+        # A3 heterogeneous-type resolution (DirectStatementLoader.java:161-211):
+        # strict ⇒ discard values whose type conflicts with the first-stored
+        # value's type; non-strict ⇒ array keeps everything as strings (our
+        # canonical `value` is already the lexical string form).
+        kept = F.col("sorted")
+        if cfg.strict_data_type_check:
+            first_t = F.element_at(F.col("sorted"), 1)["t"]
+            kept = F.filter(kept, lambda x: x["t"] == first_t)
+        all_values = F.array_distinct(F.transform(kept, lambda x: x["v"]))
+    else:
+        all_values = last_v
+    if cfg.handle_multival == ARRAY:
+        if cfg.multival_prop_list:
+            # multivalPropList holds full predicate IRIs
+            # (RDFToLPGStatementProcessor.java:350-368)
+            values = F.when(
+                F.col("pred_raw_min").isin(cfg.multival_prop_list), all_values
+            ).otherwise(last_v)
+        else:
+            values = all_values
+    else:  # OVERWRITE: last value wins (RDFToLPGStatementProcessor.java:346-349)
+        values = last_v
+    node_props = states["prop_state"].select(
+        F.col("subject").alias("uri"),
+        "gkey",
+        F.col("g_min").alias("graph"),
+        F.col("pred_t").alias("prop"),
+        F.col("pred_raw_min").alias("prop_raw"),
+        values.alias("values"),
+        F.col("last.t").alias("value_type"),
+        F.col("last.dt").alias("datatype"),
+        F.col("last.lg").alias("lang"),
+        F.when(F.col("vt_min") != F.col("vt_max"), 2).otherwise(1).alias("n_types"),
+    )
+
     props_map = node_props.groupBy("uri", "gkey").agg(
         F.map_from_entries(
             F.array_sort(
@@ -284,10 +326,12 @@ def materialize(
             )
         ).alias("props")
     )
-    nodes = all_uris.join(props_map, ["uri", "gkey"], "left")
-    if labels is not None:
+    nodes = states["uri_state"].select("uri", "gkey", F.col("g_min").alias("graph")).join(
+        props_map, ["uri", "gkey"], "left"
+    )
+    if cfg.handle_rdf_types in (LABELS, LABELS_AND_NODES):
         nodes = nodes.join(
-            labels.select(F.col("subject").alias("uri"), "gkey", "labels"),
+            states["label_state"].select(F.col("subject").alias("uri"), "gkey", "labels"),
             ["uri", "gkey"],
             "left",
         )
@@ -299,11 +343,37 @@ def materialize(
         F.coalesce("labels", F.array()).alias("labels"),
         F.coalesce("props", F.expr("cast(map() as map<string,string>)")).alias("props"),
     )
-    edges = edges.select("src", "rel", "dst", "graph", "props")
+
+    star_props = states["star_state"].groupBy("src", "_raw_rel", "dst").agg(
+        F.map_from_entries(
+            F.array_sort(F.collect_list(F.struct("prop", F.col("last.v").alias("value"))))
+        ).alias("props")
+    )
+    # star_props is usually tiny relative to edges; AQE picks the build side
+    star_mapped = star_props.join(
+        states["rel_raw_state"], ["src", "_raw_rel", "dst"], "inner"
+    ).select("src", "rel", "dst", "props")
+    edges = states["edge_state"].join(star_mapped, ["src", "rel", "dst"], "left").select(
+        "src", "rel", "dst", "graph", "props"
+    )
     node_props = node_props.select(
         "uri", "graph", "prop", "prop_raw", "values", "value_type", "datatype", "lang", "n_types"
     )
     return GraphTables(nodes=nodes, edges=edges, node_props=node_props)
+
+
+def materialize(
+    triples_t: DataFrame, cfg: GraphConfig, cache_intermediate: bool = False
+) -> GraphTables:
+    """Transformed triples (`transform_triples` output) → GraphTables:
+    the partial aggregates of the whole input, finalized."""
+    states = partial_states(triples_t, cfg, _ord())
+    if cache_intermediate:
+        # the per-prop aggregation feeds BOTH the node_props output and
+        # the nodes props-map (and any SHACL/export fan-out) — persist it
+        # once so the consumers don't recompute it
+        states["prop_state"] = states["prop_state"].persist()
+    return derive_tables(states, cfg)
 
 
 def write_edges_partitioned(

@@ -42,14 +42,14 @@ def import_rdf(
     cfg: Optional[GraphConfig] = None,
     link_entities: bool = True,
     mapping: Optional[Dict[str, str]] = None,
-    cache_triples: bool = True,
 ) -> ImportResult:
     cfg = cfg or GraphConfig()
-    raw = extract_triples(src_files, abort_on_error=cfg.abort_on_error and False)
-    if cache_triples:
-        # the parse is the expensive Python stage — materialize it once,
-        # every downstream branch (props/labels/edges/CC) reuses it
-        raw = raw.cache()
+    # never abort: a malformed file is quarantined (its rows carry
+    # parse_error) and counted in parse_errors, whatever cfg.abort_on_error
+    raw = extract_triples(src_files, abort_on_error=False)
+    # the parse is the expensive Python stage — materialize it once,
+    # every downstream branch (props/labels/edges/CC) reuses it
+    raw = raw.cache()
     triples_parsed = raw.count()
     parse_errors = raw.filter(F.col("parse_error").isNotNull()).count()
 
@@ -61,9 +61,8 @@ def import_rdf(
     if link_entities:
         comp = canonical_map(t)
         t = canonicalize_triples(t, comp)
-    if cache_triples:
-        t = t.cache()
-    tables = materialize(t, cfg, cache_intermediate=cache_triples)
+    t = t.cache()
+    tables = materialize(t, cfg, cache_intermediate=True)
     loaded = t.count()  # transform_triples already drops quarantined rows
     from .checkpoint import config_fingerprint
 

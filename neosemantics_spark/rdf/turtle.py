@@ -560,9 +560,9 @@ def parse_ntriples_line(line: str) -> Optional[Statement]:
         return None
     m = _NT_LINE.match(line)
     if m is None:
-        # fall back to the full parser for exotic lines (quoted triples etc.)
-        stmts = parse_turtle(line)
-        return stmts[0] if stmts else None
+        # exotic lines (quoted triples etc.): the full term grammar, plus
+        # the N-Quads graph slot that Turtle statements lack
+        return _parse_nquad_star_line(line)
     u = TurtleParser("")  # for _unescape only
 
     def term(tok: str) -> Term:
@@ -585,6 +585,21 @@ def parse_ntriples_line(line: str) -> Optional[Statement]:
 
     g = m.group("g")
     return Statement(term(m.group("s")), term(m.group("p")), term(m.group("o")), g[1:-1] if g else None)
+
+
+def _parse_nquad_star_line(line: str) -> Statement:
+    p = TurtleParser(line)
+    s = p._read_term()
+    pred = p._read_term(as_predicate=True)
+    o = p._read_term()
+    p._skip_ws()
+    g = p._read_iriref().value if p._peek() == "<" else None
+    p._skip_ws()
+    p._expect(".")
+    p._skip_ws()
+    if p.i < p.n:
+        raise p._error("trailing content after statement")
+    return Statement(s, pred, o, g)
 
 
 def parse_ntriples(text: str) -> List[Statement]:

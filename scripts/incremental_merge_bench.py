@@ -103,7 +103,7 @@ def synth_triples(spark, subjects, tag):
     df = rows[0]
     for r in rows[1:]:
         df = df.unionByName(r)
-    # the columns transform_triples emits that _partials + _ord consume
+    # the columns transform_triples emits that partial_states + _ord consume
     return df.select(
         "subject",
         "predicate",

@@ -131,8 +131,13 @@ def test_step_fixtures_array_accumulates(spark, tmp_path):
             strict_data_type_check=True,
             handle_rdf_types=LABELS_AND_NODES,
         ),
+        GraphConfig(
+            handle_vocab_uris=KEEP,
+            handle_multival=ARRAY,
+            multival_prop_list=["http://example.org/tag"],
+        ),
     ],
-    ids=["overwrite", "array", "strict-nodes"],
+    ids=["overwrite", "array", "strict-nodes", "array-proplist"],
 )
 def test_merge_of_batches_equals_union(spark, tmp_path, cfg):
     """The headline invariant: canonical-order incremental merge is

@@ -218,6 +218,34 @@ def test_cc_canonicalization(spark, raw):
     assert p["http://example.org/rank"] == "3"
 
 
+def test_cc_fast_path_matches_distributed_loop(spark, tmp_path):
+    """The driver-side union-find fast path and the distributed loop give
+    identical (uri, component) rows. The shuffled 64-node chain takes the
+    loop through five rounds, past its every-4th-round parquet pin."""
+    import os
+    import random
+
+    from neosemantics_spark.operators.cc import connected_components
+
+    rng = random.Random(3)
+    chain = [f"http://x/n{i:03d}" for i in range(64)]
+    rng.shuffle(chain)
+    edges = list(zip(chain, chain[1:]))
+    for host in ("y", "z"):
+        a, b, c = (f"http://{host}/{k}" for k in "abc")
+        edges += [(a, b), (b, c), (c, a)]
+    rng.shuffle(edges)
+    df = spark.createDataFrame(edges, "a string, b string")
+    pins = tmp_path / "pins"
+    pins.mkdir()
+    loop = connected_components(df, small_graph_limit=0, scratch_dir=str(pins))
+    assert os.listdir(pins), "the stats-reset parquet pin never ran"
+    fast = sorted(tuple(r) for r in connected_components(df).collect())
+    assert sorted(tuple(r) for r in loop.collect()) == fast
+    assert len(fast) == 70
+    assert {c for _, c in fast} == {"http://x/n000", "http://y/a", "http://z/a"}
+
+
 def test_pipeline_facade(spark):
     res = import_rdf(fixture_corpus(spark), GraphConfig(handle_vocab_uris=KEEP))
     assert res.parse_errors == 1

@@ -56,6 +56,23 @@ def test_semicolon_variants():
     assert len(s) == 2
 
 
+def test_nquads_star_line_keeps_graph():
+    """The N-Triples exporter writes an RDF-star annotation in a named
+    graph as `<< s p o >> p o g .`; the line must parse with its graph."""
+    from neosemantics_spark.rdf.terms import QuotedTriple
+
+    text = (
+        '<< <http://a> <http://p> <http://b> >> <http://q> "x" <http://g> .\n'
+        '<< <http://a> <http://p> <http://b> >> <http://q> "y" .\n'
+    )
+    named, default = parse_ntriples(text)
+    assert named.s == QuotedTriple(IRI("http://a"), IRI("http://p"), IRI("http://b"))
+    assert named.o.lexical == "x" and named.g == "http://g"
+    assert default.o.lexical == "y" and default.g is None
+    with pytest.raises(RDFParseError):
+        parse_ntriples('<< <http://a> <http://p> <http://b> >> <http://q> "x" <http://g> <http://h> .')
+
+
 def test_undefined_prefix_raises():
     with pytest.raises(RDFParseError):
         parse_turtle("ex:a ex:p ex:b .")
